@@ -441,7 +441,10 @@ def q_streaming_evtx(spark, sf_dir):
     import tempfile
 
     from super_speedy_syslog_searcher_spark.operators.evtx import (
-        run_evtx_stream_available_now,
+        read_evtx_stream,
+    )
+    from super_speedy_syslog_searcher_spark.sources.binary import (
+        drain_available_now,
     )
 
     session.prep(spark)
@@ -449,7 +452,7 @@ def q_streaming_evtx(spark, sf_dir):
     out_dir = tempfile.mkdtemp(prefix="s4sevtx_out_")
     ck = tempfile.mkdtemp(prefix="s4sevtx_ck_")
     _write_evtx_fixtures(spark, sf_dir, in_dir, compress_f1=True)
-    run_evtx_stream_available_now(spark, in_dir, out_dir, ck)
+    drain_available_now(read_evtx_stream(spark, in_dir), out_dir, ck)
     out = spark.read.parquet(out_dir)
     return out.select(
         F.regexp_extract("source", r"(f\d)\.evtx", 1).alias(
@@ -470,7 +473,10 @@ def q_streaming_journal(spark, sf_dir):
     import tempfile
 
     from super_speedy_syslog_searcher_spark.operators.journal import (
-        run_journal_stream_available_now,
+        read_journal_stream,
+    )
+    from super_speedy_syslog_searcher_spark.sources.binary import (
+        drain_available_now,
     )
 
     session.prep(spark)
@@ -478,7 +484,7 @@ def q_streaming_journal(spark, sf_dir):
     out_dir = tempfile.mkdtemp(prefix="s4sjrnl_out_")
     ck = tempfile.mkdtemp(prefix="s4sjrnl_ck_")
     _write_journal_fixtures(spark, sf_dir, in_dir, compress_f1=True)
-    run_journal_stream_available_now(spark, in_dir, out_dir, ck)
+    drain_available_now(read_journal_stream(spark, in_dir), out_dir, ck)
     out = spark.read.parquet(out_dir)
     return out.select(
         F.regexp_extract("source", r"(f\d)\.journal", 1).alias(

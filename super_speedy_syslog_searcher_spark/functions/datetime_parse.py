@@ -584,13 +584,15 @@ def parse_series(
     (src/data/mod.rs:34-44): null ts, null pattern_id,
     sink='continuation'.
 
-    winner_pids (optional, index-aligned, NaN = unknown) is the frozen
-    per-source dominant pattern: those rows try their winner FIRST and
-    skip the bank walk on a hit — s4's learned single-DTPD fast path
-    (syslinereader.rs:920, dt_patterns freeze at :2090-2172).  Bank
-    entries are constructed pairwise-disjoint (lookaheads on the
-    catch-all families), so winner-first output equals strict
-    bank-order output; misses fall through to the normal walk.
+    winner_pids (optional; NaN = unknown) is the frozen per-source
+    dominant pattern, aligned by POSITION with texts (row i's winner
+    is winner_pids' i-th value, whatever the index says): those rows
+    try their winner FIRST and skip the bank walk on a hit — s4's
+    learned single-DTPD fast path (syslinereader.rs:920, dt_patterns
+    freeze at :2090-2172).  Bank entries are constructed
+    pairwise-disjoint (lookaheads on the catch-all families), so
+    winner-first output equals strict bank-order output; misses fall
+    through to the normal walk.
     """
     idx = texts.index
     # per-row anchor years (index-aligned; NaN → the scalar default)

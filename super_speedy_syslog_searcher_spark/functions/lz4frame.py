@@ -5,7 +5,7 @@ Written from the public LZ4 specifications
 lz4_Block_format.md) so `.lz4` inputs decode without the optional
 `lz4` wheel — the reference handles `.lz4` via the lz4_flex crate
 (src/readers/blockreader.rs FileLz4).  When the real `lz4` package
-IS importable, sources/logfiles._decompress prefers it (C speed);
+IS importable, sources/binary._decompress prefers it (C speed);
 this module is the dependency-free fallback, plenty for log-sized
 files (~5-10 MB/s in CPython).
 

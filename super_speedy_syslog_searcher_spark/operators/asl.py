@@ -46,6 +46,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.binary import read_binary
+
 MAGIC = b"ASL DB\x00\x00\x00\x00\x00\x00"
 LEVELS = [
     "Emergency", "Alert", "Critical", "Error",
@@ -195,49 +197,10 @@ def decode_asl_file(data: bytes) -> pd.DataFrame:
     ]
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from ..sources.logfiles import _decompress
-
-    for pdf in batches:
-        frames = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            # per-file fault isolation (same contract as the text
-            # source): one undecodable file — wrong magic, torn
-            # stream, AppleDouble "._" sidecar — warns and skips
-            # instead of killing the job (s4 records a per-file
-            # processing error and moves on)
-            try:
-                f = decode_asl_file(_decompress(path, bytes(content)))
-            except Exception as ex:  # noqa: BLE001
-                import sys as _sys
-
-                print(
-                    f"WARNING: failed to decode {path!r}: "
-                    f"{type(ex).__name__}: {ex}",
-                    file=_sys.stderr,
-                )
-                continue
-            f.insert(0, "source", path)
-            frames.append(f)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-
-
 def read_asl(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """.asl stores → records DataFrame (one chain walk per file in an
-    Arrow-batched mapInPandas; binaryFile never splits a file)."""
-    from ..sources.logfiles import hadoop_glob_escape
-
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
-    )
+    """.asl stores → records DataFrame (one chain walk per file;
+    sources/binary.py owns the whole-file read)."""
+    return read_binary(spark, paths, decode_asl_file, RECORDS_SCHEMA)
 
 
 def encode_asl(records: list[dict]) -> bytes:

@@ -62,6 +62,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.binary import read_binary
+
 # public constant (evntrace.h EventTraceGuid) — the provider of the
 # kernel's EventTrace group
 EVENT_TRACE_GUID = "68fdd900-4a3e-11d1-84f4-0000f80464e3"
@@ -350,46 +352,10 @@ def decode_etl_file(data: bytes) -> pd.DataFrame:
     ]
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from ..sources.logfiles import _decompress
-
-    for pdf in batches:
-        frames = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            # per-file fault isolation, same contract as the other
-            # binary readers
-            try:
-                f = decode_etl_file(_decompress(path, bytes(content)))
-            except Exception as ex:  # noqa: BLE001
-                import sys as _sys
-
-                print(
-                    f"WARNING: failed to decode {path!r}: "
-                    f"{type(ex).__name__}: {ex}",
-                    file=_sys.stderr,
-                )
-                continue
-            f.insert(0, "source", path)
-            frames.append(f)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-
-
 def read_etl(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """.etl files → records DataFrame (one buffer walk per file in an
-    Arrow-batched mapInPandas; binaryFile never splits a file)."""
-    from ..sources.logfiles import hadoop_glob_escape
-
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
-    )
+    """.etl files → records DataFrame (one buffer walk per file;
+    sources/binary.py owns the whole-file read)."""
+    return read_binary(spark, paths, decode_etl_file, RECORDS_SCHEMA)
 
 
 def encode_etl(

@@ -15,9 +15,10 @@ documentation):
    record identifier, u64 FILETIME written-time, binary-XML payload
    (size − 28 bytes), u32 size copy
 
-Spark-first shape: whole files via the binaryFile source, decoded in
-an Arrow-batched ``mapInPandas`` (one walk per file — the
-one-reader-per-file model, same as fixedstruct).  Record headers are
+Spark-first shape: ``decode_evtx_file`` walks one whole file; the
+shared binary source (``sources/binary.py``) feeds it every file in
+an Arrow-batched ``mapInPandas`` — the one-reader-per-file model of
+every binary decoder here.  Record headers are
 fixed-offset slices; the binary-XML payload stays opaque (the
 reference hands it to the crate's template expansion — a vendored
 parser we deliberately do not port; payloads here surface as
@@ -35,12 +36,13 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.binary import read_binary, stream_binary
 
 FILE_MAGIC = b"ElfFile\x00"
 CHUNK_MAGIC = b"ElfChnk\x00"
@@ -127,66 +129,10 @@ def _frame(rec_idx, record_id, ts_us, payload, plen) -> pd.DataFrame:
     )
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from ..sources.logfiles import _decompress
-
-    for pdf in batches:
-        frames = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            # per-file fault isolation (same contract as the text
-            # source): one undecodable file — wrong magic, torn
-            # stream, AppleDouble "._" sidecar — warns and skips
-            # instead of killing the job (s4 records a per-file
-            # processing error and moves on)
-            try:
-                f = decode_evtx_file(_decompress(path, bytes(content)))
-            except Exception as ex:  # noqa: BLE001
-                import sys as _sys
-
-                print(
-                    f"WARNING: failed to decode {path!r}: "
-                    f"{type(ex).__name__}: {ex}",
-                    file=_sys.stderr,
-                )
-                continue
-            f.insert(0, "source", path)
-            frames.append(f)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-
-
 def read_evtx(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     """.evtx files → records DataFrame (enumeration order, one walk
-    per file inside mapInPandas; binaryFile never splits a file)."""
-    from ..sources.logfiles import hadoop_glob_escape
-
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
-    )
-
-
-def run_evtx_stream_available_now(
-    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain the EVTX file stream with Trigger.AvailableNow to a
-    parquet sink — the batch-equivalence harness shape (process every
-    file currently present, checkpoint, stop)."""
-    q = (
-        read_evtx_stream(spark, in_dir)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    per file; sources/binary.py owns the whole-file read)."""
+    return read_binary(spark, paths, decode_evtx_file, RECORDS_SCHEMA)
 
 
 def resort_with_ooo(records: DataFrame) -> DataFrame:
@@ -277,31 +223,15 @@ def encode_evtx(records: list[dict]) -> bytes:
     return bytes(hdr) + b"".join(chunks)
 
 
-BINARYFILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long, "
-    "content binary"
-)
-
-
 def read_evtx_stream(spark: SparkSession, in_dir: str) -> DataFrame:
     """Structured-Streaming EVTX ingestion: new .evtx files appearing
-    under ``in_dir`` decode incrementally (binaryFile file-stream →
-    the same per-file chunk walk in mapInPandas).  The stream
-    checkpoint tracks processed FILES, so a restart decodes only new
-    arrivals — the streaming analogue of EvtxReader's one-shot file
-    processing, with exactly-once file accounting for free."""
-    bf = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARYFILE_SCHEMA)
-        # batch routing accepts compressed variants (.evtx.xz etc.;
-        # _decode_batches decompresses by extension) — the stream
-        # glob must match them too
-        .option(
-            "pathGlobFilter",
-            "*.evtx{,.gz,.bz2,.xz,.lzma,.lz4}",
-        )
-        .load(in_dir)
-    )
-    return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
+    under ``in_dir`` decode incrementally through the same per-file
+    chunk walk.  The stream checkpoint tracks processed FILES, so a
+    restart decodes only new arrivals — the streaming analogue of
+    EvtxReader's one-shot file processing, with exactly-once file
+    accounting for free.  The glob matches the compressed variants
+    batch routing accepts (.evtx.xz etc.)."""
+    return stream_binary(
+        spark, in_dir, "*.evtx{,.gz,.bz2,.xz,.lzma,.lz4}",
+        decode_evtx_file, RECORDS_SCHEMA,
     )

@@ -4,9 +4,10 @@ The reference ships a 6,119-line table-driven decoder for utmp/utmpx/
 lastlog/acct layouts across platforms (src/data/fixedstruct.rs;
 reader protocol src/readers/fixedstructreader.rs:190-215: entry-sized
 blocks → typed records → chronological order).  Spark-first
-re-expression: whole files arrive via the binaryFile source, and ONE
-numpy ``frombuffer`` with a structured dtype decodes every record of
-a file at once inside mapInPandas — vectorized, no per-record Python.
+re-expression: whole files arrive via the shared binary source
+(``sources/binary.py``), and ONE numpy ``frombuffer`` with a
+structured dtype decodes every record of a file at once — vectorized,
+no per-record Python.
 
 The layout here is the glibc x86_64 ``struct utmp`` (384 bytes,
 little-endian — bits/utmp.h; the reference's linux_x86::utmpx
@@ -15,12 +16,14 @@ equivalent).  Other layouts are additional dtypes in ``LAYOUTS``.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.binary import read_binary
 
 # glibc bits/utmp.h, x86_64: short ut_type; pad; pid_t ut_pid;
 # char ut_line[32]; char ut_id[4]; char ut_user[32]; char ut_host[256];
@@ -128,36 +131,6 @@ def decode_records(
     )
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame], dtype: np.dtype
-) -> Iterator[pd.DataFrame]:
-    from ..sources.logfiles import _decompress
-
-    for pdf in batches:
-        frames = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            # per-file fault isolation (same contract as the text
-            # source): one undecodable file — wrong magic, torn
-            # stream, AppleDouble "._" sidecar — warns and skips
-            # instead of killing the job (s4 records a per-file
-            # processing error and moves on)
-            try:
-                f = decode_records(_decompress(path, bytes(content)), dtype)
-            except Exception as ex:  # noqa: BLE001
-                import sys as _sys
-
-                print(
-                    f"WARNING: failed to decode {path!r}: "
-                    f"{type(ex).__name__}: {ex}",
-                    file=_sys.stderr,
-                )
-                continue
-            f.insert(0, "source", path)
-            frames.append(f)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-
-
 def read_fixedstruct(
     spark: SparkSession,
     paths: list[str] | str,
@@ -165,24 +138,15 @@ def read_fixedstruct(
 ) -> DataFrame:
     """utmp files → typed records DataFrame.
 
-    A file is the unit of parallelism (binaryFile never splits), same
-    as the reference's one-reader-per-file model; the decode is one
-    numpy frombuffer per file inside an Arrow-batched mapInPandas.
+    A file is the unit of parallelism (sources/binary.py), same as
+    the reference's one-reader-per-file model; the decode is one
+    numpy frombuffer per file.
     Chronological ordering, when needed, is the ordinary merge stage
     downstream (the reference pre-sorts in FixedStructReader because
     it streams; a DataFrame sorts lazily where required).
     """
-    from ..sources.logfiles import hadoop_glob_escape
-
-    dtype = LAYOUTS[layout]
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return bf.select("path", "content").mapInPandas(
-        lambda it: _decode_batches(it, dtype), RECORDS_SCHEMA
-    )
+    decode = functools.partial(decode_records, dtype=LAYOUTS[layout])
+    return read_binary(spark, paths, decode, RECORDS_SCHEMA)
 
 
 def encode_records(rows: list[dict], dtype: np.dtype = UTMPX_DTYPE) -> bytes:

@@ -16,9 +16,9 @@ itself.  The format IS public (systemd.io "Journal File Format"):
  * an incompatible COMPACT flag switches ENTRY items from 16-byte
    (offset u64, hash u64) pairs to 4-byte u32 offsets
 
-Spark-first shape, same recipe as ``operators/evtx.py`` /
-``fixedstruct.py``: whole files via binaryFile, ONE sequential object
-walk per file inside mapInPandas (no hash-table chasing — the walk
+Spark-first shape, same recipe as every binary decoder here (the
+shared whole-file source is ``sources/binary.py``): ONE sequential
+object walk per file (no hash-table chasing — the walk
 visits every object once, which is also how `journalctl --verify`
 iterates), entries resolved against the in-file DATA offset map.
 Compressed DATA payloads (XZ/LZ4/ZSTD object flags) are decoded for
@@ -35,12 +35,13 @@ tables).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.binary import read_binary, stream_binary
 
 SIGNATURE = b"LPKSHHRH"
 HEADER_SIZE_V187 = 240  # through n_entry_arrays (systemd 187+ layout)
@@ -194,65 +195,10 @@ def _frame(cols: dict[str, list]) -> pd.DataFrame:
     )
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from ..sources.logfiles import _decompress
-
-    for pdf in batches:
-        frames = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            # per-file fault isolation (same contract as the text
-            # source): one undecodable file — wrong magic, torn
-            # stream, AppleDouble "._" sidecar — warns and skips
-            # instead of killing the job (s4 records a per-file
-            # processing error and moves on)
-            try:
-                f = decode_journal_file(_decompress(path, bytes(content)))
-            except Exception as ex:  # noqa: BLE001
-                import sys as _sys
-
-                print(
-                    f"WARNING: failed to decode {path!r}: "
-                    f"{type(ex).__name__}: {ex}",
-                    file=_sys.stderr,
-                )
-                continue
-            f.insert(0, "source", path)
-            frames.append(f)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-
-
 def read_journal(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """.journal files → entries DataFrame (one walk per file inside
-    mapInPandas; binaryFile never splits a file)."""
-    from ..sources.logfiles import hadoop_glob_escape
-
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
-    )
-
-
-def run_journal_stream_available_now(
-    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain the journal file stream with Trigger.AvailableNow to a
-    parquet sink — see evtx.run_evtx_stream_available_now."""
-    q = (
-        read_journal_stream(spark, in_dir)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """.journal files → entries DataFrame (one walk per file;
+    sources/binary.py owns the whole-file read)."""
+    return read_binary(spark, paths, decode_journal_file, RECORDS_SCHEMA)
 
 
 def encode_journal(records: list[dict]) -> bytes:
@@ -327,20 +273,9 @@ def encode_journal(records: list[dict]) -> bytes:
 
 def read_journal_stream(spark: SparkSession, in_dir: str) -> DataFrame:
     """Structured-Streaming journal ingestion — see
-    evtx.read_evtx_stream; same shape over the journal object walk."""
-    from .evtx import BINARYFILE_SCHEMA
-
-    bf = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARYFILE_SCHEMA)
-        # match compressed variants like batch routing does
-        # (.journal.gz decompresses inside _decode_batches)
-        .option(
-            "pathGlobFilter",
-            "*.journal{,.gz,.bz2,.xz,.lzma,.lz4}",
-        )
-        .load(in_dir)
-    )
-    return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
+    evtx.read_evtx_stream; same shape over the journal object walk,
+    compressed variants (.journal.gz etc.) included."""
+    return stream_binary(
+        spark, in_dir, "*.journal{,.gz,.bz2,.xz,.lzma,.lz4}",
+        decode_journal_file, RECORDS_SCHEMA,
     )

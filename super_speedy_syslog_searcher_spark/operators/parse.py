@@ -81,12 +81,13 @@ def parse_stage(
     scatter: parse is row-independent, but the input is often
     partitioned by conv_id (upstream windows / table layout) and a
     hot conversation then makes one straggler task own ~20% of the
-    rows.  A round-robin repartition to the cluster's parallelism
-    before the UDF removes the straggler — the Spark analogue of s4's
-    one-huge-file thread imbalance, and the skew fixture's reason to
-    exist.  At 10^12 rows the same is achieved by file-split-sized
-    input partitions (maxPartitionBytes), so the shuffle is skipped
-    when the input is already well-partitioned.
+    rows.  Repartitioning to the cluster's parallelism before the UDF
+    — hashed on the unique (conv_id, turn_idx) key, round-robin when
+    the input has no such key — removes the straggler: the Spark
+    analogue of s4's one-huge-file thread imbalance, and the skew
+    fixture's reason to exist.  At 10^12 rows the same is achieved by
+    file-split-sized input partitions (maxPartitionBytes), so the
+    shuffle is skipped when the input is already well-partitioned.
     """
     if scatter:
         sc = df.sparkSession.sparkContext

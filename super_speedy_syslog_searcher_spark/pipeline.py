@@ -28,8 +28,9 @@ def parse_repair(
 ) -> DataFrame:
     """narrow=True drops the text payload right after the parse UDF
     (keeping text_len for the summary stats) so the window/shuffle
-    stages move ~30% of the bytes; full_merge joins text back by the
-    (conv_id, turn_idx) key just before the final ordered output.
+    stages move ~30% of the bytes.  Nothing joins text back: narrow
+    output serves summary-style consumers (the CLI's --summary), and
+    full_merge never sets it.
 
     freeze=True runs s4's sample-then-freeze fast path
     (syslinereader.rs:920): a bounded head sample learns each conv's

@@ -1,6 +1,7 @@
 """SparkSession factory + per-query session hygiene.
 
-Local-mode defaults tuned for the sandbox (single JVM, 32 threads);
+Local-mode defaults are sized from the host (cores from the scheduler
+affinity mask, driver heap from physical memory or the cgroup limit);
 on a real cluster the same code runs unchanged — only master/memory
 change.  All timestamp semantics are pinned to UTC so results are
 engine-portable (DuckDB oracle timestamps are UTC-naive).
@@ -12,12 +13,25 @@ import os
 
 from pyspark.sql import SparkSession
 
-# retained for callers that imported the old constant; the default is
-# now derived from the session's core count (see get_spark) so the
-# shuffle width tracks $SPARK_GRAFT_CPUS instead of being tuned to one
-# local box — guide §2.2: size partitions from the cluster, not a
-# constant, and let AQE coalesce below it
-DEFAULT_SHUFFLE_PARTITIONS = "32"
+
+def default_driver_memory() -> str:
+    """Half of the tighter of physical memory and the cgroup memory
+    limit, clamped to [1g, 8g]: a heap the host can actually commit,
+    since a JVM that grows past the host's memory dies mid-run."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2 ("max" = unlimited)
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limit = min(limit, int(raw))
+    mb = limit // 2 // 2**20
+    return f"{max(1024, min(8192, mb))}m"
 
 
 def get_spark(
@@ -28,10 +42,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession with pipeline defaults.
 
-    AQE is on (runtime coalesce + skew-split), Arrow is on (all our
-    UDFs are pandas/Arrow-vectorized), session tz is UTC.
+    Cores default to the scheduler affinity mask and the driver heap
+    to ``default_driver_memory()``; ``$SPARK_GRAFT_CPUS`` and
+    ``$S4SPARK_DRIVER_MEM`` override them.  AQE is on (runtime
+    coalesce + skew-split), Arrow is on (all our UDFs are
+    pandas/Arrow-vectorized), session tz is UTC.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
@@ -53,7 +72,10 @@ def get_spark(
         # −14% UDF compute; kernel µs/row keeps falling through 200k).
         # Memory per batch stays tiny for this corpus (~60 B/row text)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
-        .config("spark.driver.memory", os.environ.get("S4SPARK_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("S4SPARK_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.extraJavaOptions", "-XX:+UseG1GC")

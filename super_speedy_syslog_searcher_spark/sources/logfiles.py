@@ -20,13 +20,22 @@ merge) runs unchanged on real log files — `s4 <paths>` parity.
 from __future__ import annotations
 
 import codecs
+import functools
 import glob as _glob
 import gzip
 import os
+import sys
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .binary import (
+    _decompress,
+    decode_binary_df,
+    decode_isolated,
+    load_binary_files,
+)
 
 # BOM sniff table, longest first (UTF-32LE's BOM starts with
 # UTF-16LE's) — detect_filetype_text_encoding parity
@@ -140,49 +149,6 @@ def read_log_files(
     )
 
 
-def _decompress(path: str, data: bytes) -> bytes:
-    """Per-codec whole-file decompression by extension — BlockReader
-    codec parity (blockreader.rs:3382 bz2, :3959 lz4, :4155 xz; gz
-    handled by its own reader).  lz4 prefers the C-backed ``lz4``
-    package when importable and otherwise uses the dependency-free
-    pure-Python frame decoder (functions/lz4frame, written from the
-    public LZ4 spec; validated against the reference corpus's real
-    .lz4 files)."""
-    if path.endswith(".gz"):
-        return gzip.decompress(data)
-    if path.endswith(".bz2"):
-        import bz2
-
-        return bz2.decompress(data)
-    if path.endswith((".xz", ".lzma")):
-        import lzma
-
-        return lzma.decompress(data)
-    if path.endswith(".lz4"):
-        try:
-            import lz4.frame  # optional C-speed fast path
-        except ImportError:
-            from ..functions import lz4frame
-
-            return lz4frame.decompress(data)
-        return lz4.frame.decompress(data)
-    return data
-
-
-def hadoop_glob_escape(path: str) -> str:
-    """Escape glob metacharacters in a LITERAL path for Hadoop's
-    GlobFilter (binaryFile/text .load treat paths as glob patterns —
-    a real file named 'entry6_1_(b1_xz).wtmp.tar' or 'a[4-0].log'
-    otherwise errors or silently matches nothing)."""
-    out = []
-    for c in path:
-        if c in '*?[]{}\\':
-            out.append('\\' + c)
-        else:
-            out.append(c)
-    return "".join(out)
-
-
 def read_log_files_decoded(
     spark: SparkSession,
     paths: list[str] | str,
@@ -204,12 +170,9 @@ def read_log_files_decoded(
     Output shape == read_log_files == transcripts: the whole pipeline
     runs unchanged on the result.
     """
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
+    return decode_text_binary_df(
+        load_binary_files(spark, paths), charset=charset
     )
-    return decode_text_binary_df(bf, charset=charset)
 
 
 def decode_text_binary_df(
@@ -265,28 +228,12 @@ def decode_text_binary_df(
             for path, mtime, content in zip(
                 pdf["path"], pdf["modificationTime"], pdf["content"]
             ):
-                # file-level fault isolation: ONE undecodable file
-                # (missing codec lib, truncated archive, corrupt
-                # stream) must never kill the job — s4 records a
-                # per-file processing error and moves on
-                # (syslogprocessor FileErr*; our --summary reports it
-                # via the absent source)
-                try:
-                    # real filesystems carry ns mtimes; Spark
-                    # timestamps are µs and the ns→µs Arrow cast is
-                    # "unsafe" — truncate up front
-                    if mtime is not None and not pd.isna(mtime):
-                        mtime = pd.Timestamp(mtime).floor("us")
-                    _decode_one(emit, path, mtime, content)
-                except Exception as ex:  # noqa: BLE001
-                    import sys as _sys
-
-                    print(
-                        f"WARNING: failed to decode {path!r}: "
-                        f"{type(ex).__name__}: {ex}",
-                        file=_sys.stderr,
-                    )
-                    continue
+                # one undecodable file (missing codec lib, truncated
+                # archive, corrupt stream) warns and is skipped; our
+                # --summary reports it via the absent source
+                decode_isolated(
+                    path, lambda: _decode_one(emit, path, mtime, content)
+                )
             if frames:
                 yield pd.concat(frames, ignore_index=True)
             else:
@@ -302,6 +249,10 @@ def decode_text_binary_df(
                 )
 
     def _decode_one(emit, path, mtime, content):
+        # real filesystems carry ns mtimes; Spark timestamps are µs
+        # and the ns→µs Arrow cast is "unsafe" — truncate up front
+        if mtime is not None and not pd.isna(mtime):
+            mtime = pd.Timestamp(mtime).floor("us")
         if path.endswith((".tar", ".tar.gz", ".tgz")):
             # archive members become independent sources
             # ('file.tar!member', process_path_tar parity —
@@ -425,9 +376,7 @@ def read_tar_members(
 
     import pandas as pd
 
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in tar_paths]
-    )
+    bf = load_binary_files(spark, tar_paths)
     schema = "path string, modificationTime timestamp, content binary"
 
     def explode(batches):
@@ -461,12 +410,10 @@ def read_tar_members(
                                 )
                             )
                 except Exception as ex:  # noqa: BLE001
-                    import sys as _sys
-
                     print(
                         f"WARNING: failed to read archive {path!r}: "
                         f"{type(ex).__name__}: {ex}",
-                        file=_sys.stderr,
+                        file=sys.stderr,
                     )
                     continue
             yield pd.DataFrame(
@@ -488,13 +435,10 @@ def assembled_from_paths(
     (path_to_filetype), run the text pipeline (encoding-aware read →
     pattern-bank parse with per-source mtime anchor years → repair →
     sysline assembly) on the text group, and map the binary readers'
-    already-timestamped records (evtx / journal / fixedstruct)
-    straight onto the assembled schema — the reference's
-    per-LogMessageType processing fan-in (s4.rs processing_loop) as a
-    unionByName.  The result feeds dt_filter + merge_ordered
-    unchanged."""
-    from pyspark.sql import functions as F
-
+    already-timestamped records (``_binary_formats``) straight onto
+    the assembled schema — the reference's per-LogMessageType
+    processing fan-in (s4.rs processing_loop) as a unionByName.  The
+    result feeds dt_filter + merge_ordered unchanged."""
     from .. import pipeline as P
 
     if isinstance(paths, str):
@@ -527,10 +471,8 @@ def assembled_from_paths(
                 continue
             groups.setdefault(path_to_filetype(g), []).append(g)
     if invalid:
-        import sys as _sys
-
         for g in invalid:
-            print(f"WARNING: not processed: {g!r}", file=_sys.stderr)
+            print(f"WARNING: not processed: {g!r}", file=sys.stderr)
         if invalid_out is not None:
             invalid_out.extend(invalid)
     # archives: scan headers driver-side, then fan each archive's
@@ -543,205 +485,123 @@ def assembled_from_paths(
         try:
             tar_types[tp] = tar_member_types(tp)
         except Exception as ex:  # noqa: BLE001
-            import sys as _sys
-
             print(
                 f"WARNING: failed to read archive {tp!r}: "
                 f"{type(ex).__name__}: {ex}",
-                file=_sys.stderr,
+                file=sys.stderr,
             )
 
-    def tars_with(t: str) -> list[str]:
-        return [p for p, ts in tar_types.items() if t in ts]
-
-    def members_of(t: str) -> DataFrame:
-        return read_tar_members(spark, tars_with(t), types={t})
+    def files_of(t: str) -> DataFrame | None:
+        """(path, modificationTime, content) of every input whose
+        inner type is t: files routed to t, then the t members of
+        each archive that holds some."""
+        files = []
+        if t in groups:
+            files.append(
+                load_binary_files(spark, groups[t]).select(
+                    "path", "modificationTime", "content"
+                )
+            )
+        tars = [p for p, ts in tar_types.items() if t in ts]
+        if tars:
+            files.append(read_tar_members(spark, tars, types={t}))
+        if not files:
+            return None
+        return functools.reduce(DataFrame.unionByName, files)
 
     if not groups and not any(tar_types.values()):
         raise ValueError(f"no readable inputs among {paths!r}")
     parts: list[DataFrame] = []
-    sel = [
-        "conv_id", "turn_idx", "role", "tool", "text", "ts",
-        "ts_eff", "sink_eff", "msg_turn_idx",
-    ]
-    text_lines: list[DataFrame] = []
-    if "text" in groups:
-        text_lines.append(
-            read_log_files_decoded(spark, groups["text"])
+    text_files = files_of("text")
+    if text_files is not None:
+        asm = P.assembled_files(
+            decode_text_binary_df(text_files), tz_offset_min=tz_offset_min
         )
-    if tars_with("text"):
-        text_lines.append(decode_text_binary_df(members_of("text")))
-    if text_lines:
-        lines = text_lines[0]
-        for x in text_lines[1:]:
-            lines = lines.unionByName(x)
-        asm = P.assembled_files(lines, tz_offset_min=tz_offset_min)
-        parts.append(asm.select(*sel))
-
-    def binary_records(t: str, reader, decode_batches, schema):
-        recs: list[DataFrame] = []
-        if t in groups:
-            recs.append(reader(spark, groups[t]))
-        if tars_with(t):
-            recs.append(
-                members_of(t)
-                .select("path", "content")
-                .mapInPandas(decode_batches, schema)
-            )
-        if not recs:
-            return None
-        out = recs[0]
-        for x in recs[1:]:
-            out = out.unionByName(x)
-        return out
-
-    from ..operators import evtx as _evtx
-    from ..operators import fixedstruct as _fx
-    from ..operators import journal as _jr
-
-    ev = binary_records(
-        "evtx", _evtx.read_evtx, _evtx._decode_batches,
-        _evtx.RECORDS_SCHEMA,
-    )
-    if ev is not None:
         parts.append(
-            ev.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("evtx").alias("role"),
-                F.lit("none").alias("tool"),
-                F.col("payload").alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("evtx").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
+            asm.select(
+                "conv_id", "turn_idx", "role", "tool", "text", "ts",
+                "ts_eff", "sink_eff", "msg_turn_idx",
             )
         )
-    jr = binary_records(
-        "journal", _jr.read_journal, _jr._decode_batches,
-        _jr.RECORDS_SCHEMA,
-    )
-    if jr is not None:
+    for t, (decode, schema, role, text, sink) in _binary_formats().items():
+        files = files_of(t)
+        if files is None:
+            continue
         parts.append(
-            jr.select(
+            decode_binary_df(files, decode, schema).select(
                 F.col("source").alias("conv_id"),
                 F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.coalesce(
-                    F.nullif("identifier", F.lit("")), F.lit("journal")
-                ).alias("role"),
+                role.alias("role"),
                 F.lit("none").alias("tool"),
-                F.col("message").alias("text"),
+                text.alias("text"),
                 F.col("ts"),
                 F.col("ts").alias("ts_eff"),
-                F.lit("journal").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-    from ..operators import asl as _asl
-
-    al = binary_records(
-        "asl", _asl.read_asl, _asl._decode_batches,
-        _asl.RECORDS_SCHEMA,
-    )
-    if al is not None:
-        # text = the validated ASL rendering (UTC ISO ts + key=value
-        # fields), the line shape the reference emits for .asl
-        parts.append(
-            al.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("asl").alias("role"),
-                F.lit("none").alias("tool"),
-                F.col("line").alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("asl").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-
-    from ..operators import etl as _etl
-
-    et = binary_records(
-        "etl", _etl.read_etl, _etl._decode_batches,
-        _etl.RECORDS_SCHEMA,
-    )
-    if et is not None:
-        # text = the reference's rendered ETL record line
-        parts.append(
-            et.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("etl").alias("role"),
-                F.lit("none").alias("tool"),
-                F.col("line").alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("etl").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-
-    from ..operators import odl as _odl
-
-    od = binary_records(
-        "odl", _odl.read_odl, _odl._decode_batches,
-        _odl.RECORDS_SCHEMA,
-    )
-    if od is not None:
-        # text = the reference's rendered ODL line
-        # ('<epoch_ms> <file>:<function>; <params>', trailing params
-        # omitted when empty) so merge/prepend/summary treat ODL rows
-        # like any pre-stamped binary source
-        parts.append(
-            od.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("odl").alias("role"),
-                F.lit("none").alias("tool"),
-                F.concat(
-                    F.unix_millis("ts").cast("string"),
-                    F.lit(" "),
-                    F.col("code_file"),
-                    F.lit(":"),
-                    F.col("function"),
-                    F.lit(";"),
-                    F.when(
-                        F.col("params") != "",
-                        F.concat(F.lit(" "), F.col("params")),
-                    ).otherwise(F.lit("")),
-                ).alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("odl").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-    fx_dtype = _fx.LAYOUTS["utmpx_linux_x86_64"]
-    fx = binary_records(
-        "fixedstruct", _fx.read_fixedstruct,
-        lambda it: _fx._decode_batches(it, fx_dtype),
-        _fx.RECORDS_SCHEMA,
-    )
-    if fx is not None:
-        parts.append(
-            fx.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("utmpx").alias("role"),
-                F.lit("none").alias("tool"),
-                F.concat_ws(
-                    " ", "ut_user", "ut_line", "ut_host"
-                ).alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("utmpx").alias("sink_eff"),
+                F.lit(sink).alias("sink_eff"),
                 F.col("rec_idx").cast("int").alias("msg_turn_idx"),
             )
         )
     if not parts:
         raise ValueError(f"no readable inputs among {paths!r}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def _binary_formats() -> dict:
+    """Inner file type → (decode_file, records schema, role, text,
+    sink): how each binary reader's already-timestamped records map
+    onto the assembled schema.  Built per call because Column
+    expressions need an active session."""
+    from ..operators import asl, etl, evtx, fixedstruct, journal, odl
+
+    return {
+        "evtx": (
+            evtx.decode_evtx_file, evtx.RECORDS_SCHEMA,
+            F.lit("evtx"), F.col("payload"), "evtx",
+        ),
+        "journal": (
+            journal.decode_journal_file, journal.RECORDS_SCHEMA,
+            F.coalesce(F.nullif("identifier", F.lit("")), F.lit("journal")),
+            F.col("message"), "journal",
+        ),
+        # text = the validated ASL rendering (UTC ISO ts + key=value
+        # fields), the line shape the reference emits for .asl
+        "asl": (
+            asl.decode_asl_file, asl.RECORDS_SCHEMA,
+            F.lit("asl"), F.col("line"), "asl",
+        ),
+        # text = the reference's rendered ETL record line
+        "etl": (
+            etl.decode_etl_file, etl.RECORDS_SCHEMA,
+            F.lit("etl"), F.col("line"), "etl",
+        ),
+        # text = the reference's rendered ODL line
+        # ('<epoch_ms> <file>:<function>; <params>', trailing params
+        # omitted when empty) so merge/prepend/summary treat ODL rows
+        # like any pre-stamped binary source
+        "odl": (
+            odl.decode_odl_file, odl.RECORDS_SCHEMA,
+            F.lit("odl"),
+            F.concat(
+                F.unix_millis("ts").cast("string"),
+                F.lit(" "),
+                F.col("code_file"),
+                F.lit(":"),
+                F.col("function"),
+                F.lit(";"),
+                F.when(
+                    F.col("params") != "",
+                    F.concat(F.lit(" "), F.col("params")),
+                ).otherwise(F.lit("")),
+            ),
+            "odl",
+        ),
+        "fixedstruct": (
+            functools.partial(
+                fixedstruct.decode_records,
+                dtype=fixedstruct.LAYOUTS["utmpx_linux_x86_64"],
+            ),
+            fixedstruct.RECORDS_SCHEMA,
+            F.lit("utmpx"),
+            F.concat_ws(" ", "ut_user", "ut_line", "ut_host"),
+            "utmpx",
+        ),
+    }

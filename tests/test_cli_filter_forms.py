@@ -9,7 +9,6 @@ resolves it to the instant the form's strftime semantics dictate.
 """
 
 import datetime as dt
-import os
 import re
 
 import pytest
@@ -18,9 +17,7 @@ from super_speedy_syslog_searcher_spark.cli import parse_dt_filter
 
 S4 = "/root/reference/src/s4/s4.rs"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isfile(S4), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference
 
 NOW = dt.datetime(2024, 6, 15, 12, 0, 0)
 

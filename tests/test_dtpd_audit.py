@@ -18,10 +18,7 @@ explains our output.
 
 import pytest
 
-pytestmark = pytest.mark.skipif(
-    __import__("os").path.isdir("/root/reference") is False,
-    reason="reference checkout not available",
-)
+pytestmark = pytest.mark.requires_reference
 
 
 def test_dtpd_coverage_complete():

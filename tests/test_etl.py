@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from super_speedy_syslog_searcher_spark.operators.etl import (
     decode_etl_file,
     encode_etl,
@@ -37,6 +39,7 @@ def _expected_lines():
     return out
 
 
+@pytest.mark.requires_reference
 def test_real_etl_matches_reference_stdout():
     """All 21 records of the reference's expected ETL output,
     byte-identical modulo the NULLx memory-address token: WMI buffer
@@ -57,6 +60,7 @@ def test_real_etl_matches_reference_stdout():
     assert df["ts"].is_monotonic_increasing
 
 
+@pytest.mark.requires_reference
 def test_compressed_etl_variants_decode():
     import gzip
     import lzma

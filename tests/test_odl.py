@@ -41,6 +41,7 @@ def _expected_records(path):
     return out
 
 
+@pytest.mark.requires_reference
 @pytest.mark.parametrize("rel", REAL_FILES)
 def test_real_odl_files_match_reference_stdout(rel):
     """Every record of the reference's own expected ODL outputs,

@@ -15,9 +15,7 @@ from pyspark.sql import functions as F
 
 REF_LOGS = "/root/reference/logs/programs"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF_LOGS), reason="reference logs not available"
-)
+pytestmark = pytest.mark.requires_reference
 
 
 def _files():
